@@ -965,8 +965,8 @@ def _ann_hyperplane(spark, sf_dir, n_bits: int = 4):
 
     Scale defenses: (a) bucket-local join, never all-pairs; (b) a hot-code
     cap — codes holding > _ANN_MAX_BUCKET home vectors are dropped from
-    candidate generation (count -> filter -> semi-join, the stage-3
-    pattern), so one dense code can never go quadratic. All arithmetic is
+    candidate generation (count -> filter -> semi-join), so one dense
+    code can never go quadratic. All arithmetic is
     JVM-side integer expressions over fixed-point vectors (floor(x*2^20)),
     which makes the DuckDB twin exact: both engines compute identical
     codes, identical candidate sets, and identical integer rank keys.

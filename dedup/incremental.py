@@ -264,7 +264,6 @@ def _run_incremental_locked(
     wh.register_delta("verified_pairs", f"verified_pairs_{delta}")
     verified_new = wh.read(spark, f"verified_pairs_{delta}")
     cand.entries.unpersist()
-    cand.counts.unpersist()
 
     # old components enter as one star per cluster — their transitive
     # closure, so CC input is |old urls in clusters| + |new dup pairs|

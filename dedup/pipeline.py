@@ -77,6 +77,28 @@ def _partition_metrics(path: str) -> list[dict]:
     return out
 
 
+def _clusters(
+    dup: DataFrame,
+    urls: DataFrame,
+    shas: DataFrame,
+    cfg: DedupConfig,
+    n_pairs: int,
+    n_docs: int,
+) -> DataFrame:
+    """Stage 5, with the size-based CC plan choice: the exact-dup
+    contraction costs two extra joins and a second CC input prep, which
+    only pays when verified pairs dwarf docs — the dup-heavy regime it
+    exists for (the replicated bench corpus runs ~32 pairs/doc; a
+    lightly-duplicated corpus runs ~3). `shas` is (url, text_sha)."""
+    if n_pairs > 8 * n_docs:
+        return connected_components_contracted(
+            dup, urls, shas, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
+        )
+    return connected_components(
+        dup, urls, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
+    )
+
+
 def run_in_memory(
     spark: SparkSession, pages: DataFrame, cfg: DedupConfig
 ) -> dict[str, DataFrame]:
@@ -90,28 +112,22 @@ def run_in_memory(
     cand = stages.stage3_candidates(sigs, buckets, cfg)
     candidates = cand.candidates.cache()
     dropped = cand.dropped_buckets.cache()
-    # materialize both consumers of the persisted entries/counts relations
-    # now, then release them — callers hold these DataFrames for a whole
+    # materialize both consumers of the persisted entries relation now,
+    # then release it — callers hold these DataFrames for a whole
     # session (driver contract), and the large entries relation (~64
     # rows/doc) must not stay pinned in executor storage that long
     candidates.count()
     dropped.count()
     cand.entries.unpersist()
-    cand.counts.unpersist()
     verified = stages.stage4_verify(candidates, sigs, pages, cfg).cache()
-    dup = verified.filter("is_dup").select("url_a", "url_b")
-    # Size-based plan choice (same rule as run()): the exact-dup
-    # contraction pays two extra joins, worth it only when pairs dwarf
-    # docs (dup-heavy corpora — the regime it exists for).
-    if verified.count() > 8 * pages.select("url").count():
-        clusters = connected_components_contracted(
-            dup, pages.select("url"), sigs.select("url", "text_sha"), cfg,
-            local_max_edges=LOCAL_CC_MAX_EDGES,
-        )
-    else:
-        clusters = connected_components(
-            dup, pages.select("url"), cfg, local_max_edges=LOCAL_CC_MAX_EDGES
-        )
+    clusters = _clusters(
+        verified.filter("is_dup").select("url_a", "url_b"),
+        pages.select("url"),
+        sigs.select("url", "text_sha"),
+        cfg,
+        n_pairs=verified.count(),
+        n_docs=pages.select("url").count(),
+    )
     return {
         "signatures": sigs,
         "buckets": buckets,
@@ -302,16 +318,16 @@ def _run_locked(
         return resume and wh.is_complete(name)
 
     # -- stages 1+2 (fused) -------------------------------------------------
-    # When neither table is committed, ONE Arrow pass (stages.stage12_fused)
+    # When either table is uncommitted, ONE Arrow pass (stages.stage12_fused)
     # computes both; persist+count materializes it on the critical path and
-    # the signatures/buckets writes are background cache-read + file IO. A
-    # resumed run with signatures already committed falls back to the
-    # separate stage-2 pass over the committed table (same values either
-    # way; tests/test_resume.py covers the mix).
+    # the missing tables' writes are background cache-read + file IO. The
+    # pass is deterministic, so a resumed run that commits only one of the
+    # two writes the same values an uninterrupted run would.
     need_sig = not committed("signatures")
     need_buk = not committed("buckets")
     fused = None
-    if need_sig:
+    add = 0  # fused compute ms, charged to the first table committed
+    if need_sig or need_buk:
         fused = stages.stage12_fused(pages_t, cfg).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -319,25 +335,18 @@ def _run_locked(
         t0 = time.monotonic()
         fused.count()
         add = int((time.monotonic() - t0) * 1000)
+    if need_sig:
         bg_commit("signatures", stages.signatures_from_fused(fused), wall_add_ms=add)
+        add = 0
     else:
         do_stage("signatures", None)  # records skip
     if stop_after == "signatures":
         return _finish()
     if need_buk:
-        if fused is not None:
-            # cheap JVM explode over the fused cache — evaluated by the
-            # background write and (again, from cache) by stage 3
-            bg_commit("buckets", stages.buckets_from_fused(fused))
-            buckets = stages.buckets_from_fused(fused)
-        else:
-            # rare resume shape (signatures committed, buckets not): the
-            # Arrow stage-2 pass would otherwise run twice (once for the
-            # write, once for stage 3) — commit in the foreground and read
-            # the committed table back instead
-            sigs_c = wh.read(spark, "signatures")
-            do_stage("buckets", lambda: stages.stage2_buckets(sigs_c, cfg))
-            buckets = wh.read(spark, "buckets")
+        # cheap JVM explode over the fused cache — evaluated by the
+        # background write and (again, from cache) by stage 3
+        bg_commit("buckets", stages.buckets_from_fused(fused), wall_add_ms=add)
+        buckets = stages.buckets_from_fused(fused)
     else:
         do_stage("buckets", None)
         buckets = wh.read(spark, "buckets")
@@ -367,7 +376,6 @@ def _run_locked(
         if cand_out is not None:
             join_bg()
             cand_out.entries.unpersist()
-            cand_out.counts.unpersist()
         return _finish()
 
     # The dropped-buckets table is a filter over stage 3's persisted counts
@@ -384,12 +392,10 @@ def _run_locked(
         cand2 = stages.stage3_candidates(sigs, buckets, cfg)
         do_stage("dropped_buckets", lambda: cand2.dropped_buckets)
         cand2.entries.unpersist()
-        cand2.counts.unpersist()
     if stop_after == "dropped_buckets":
         if cand_out is not None:
             join_bg()
             cand_out.entries.unpersist()
-            cand_out.counts.unpersist()
         return _finish()
 
     # -- stage 4 (verify) ---------------------------------------------------
@@ -413,7 +419,6 @@ def _run_locked(
         bg_commit("verified_pairs", verified, wall_add_ms=add)
     if cand_out is not None:
         cand_out.entries.unpersist()
-        cand_out.counts.unpersist()
     if stop_after == "verified_pairs":
         return _finish()
 
@@ -431,25 +436,16 @@ def _run_locked(
         join_bg()
         clusters = wh.read(spark, "clusters")
     else:
-        dup = verified.filter("is_dup").select("url_a", "url_b")
-        # Size-based plan choice: the exact-dup contraction costs two
-        # extra joins and a second CC input prep, which only pays when
-        # pairs dwarf docs — the dup-heavy regime it exists for (the
-        # replicated bench corpus runs ~32 pairs/doc; a lightly-duplicated
-        # corpus runs ~3).
         n_docs = max(1, (wh._read_manifest("pages") or {}).get("rows", 1))
         t0 = time.monotonic()
-        if n_pairs > 8 * n_docs:
-            clusters = connected_components_contracted(
-                dup, pages_t.select("url"), sigs_com.select("url", "text_sha"),
-                cfg, local_max_edges=LOCAL_CC_MAX_EDGES,
-            )
-        else:
-            clusters = connected_components(
-                dup, pages_t.select("url"), cfg,
-                local_max_edges=LOCAL_CC_MAX_EDGES,
-            )
-        clusters = clusters.persist(StorageLevel.MEMORY_AND_DISK)
+        clusters = _clusters(
+            verified.filter("is_dup").select("url_a", "url_b"),
+            pages_t.select("url"),
+            sigs_com.select("url", "text_sha"),
+            cfg,
+            n_pairs=n_pairs,
+            n_docs=n_docs,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         pinned.append(clusters)
         clusters.count()
         add = int((time.monotonic() - t0) * 1000)

@@ -29,7 +29,6 @@ from .features import (
     doc_features,
     minhash_params,
     u64_to_i64,
-    i64_to_u64,
 )
 
 # ---------------------------------------------------------------------------
@@ -48,19 +47,10 @@ SIGNATURES_SCHEMA = T.StructType(
     ]
 )
 
-BUCKETS_SCHEMA = T.StructType(
-    [
-        T.StructField("band", T.IntegerType(), False),
-        T.StructField("bucket_key", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("is_probe", T.BooleanType(), False),
-        T.StructField("probe_rank", T.IntegerType(), False),
-    ]
-)
-
 #: fused stage-1+2 output: the signature bundle plus this document's
-#: bucket rows as four parallel arrays (JVM-side arrays_zip + explode
-#: turns them into the BUCKETS_SCHEMA rows — no second Arrow pass)
+#: bucket rows as four parallel arrays (JVM-side arrays_zip + explode,
+#: stages.buckets_from_fused, turns them into bucket rows — no second
+#: Arrow pass)
 FUSED_SCHEMA = T.StructType(
     list(SIGNATURES_SCHEMA.fields)
     + [
@@ -68,13 +58,6 @@ FUSED_SCHEMA = T.StructType(
         T.StructField("b_key", T.ArrayType(T.LongType(), False), False),
         T.StructField("b_probe", T.ArrayType(T.BooleanType(), False), False),
         T.StructField("b_rank", T.ArrayType(T.IntegerType(), False), False),
-    ]
-)
-
-PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
     ]
 )
 
@@ -88,12 +71,12 @@ SUBSTR_SCHEMA = T.StructType(
 
 
 # ---------------------------------------------------------------------------
-# U1 — signatures: (url, text) -> full signature bundle
+# U1+U2 — fused: (url, text) -> signature bundle + home/probe bucket entries
 # ---------------------------------------------------------------------------
 def _sig_columns(pdf: pd.DataFrame, cfg: DedupConfig, a, b):
     """Signature columns for one Arrow batch, plus the raw uint64
-    minhash/runnerup matrices (the fused stage-2 path derives bucket keys
-    from them without re-crossing the Arrow boundary).
+    minhash/runnerup matrices (make_fused_fn derives bucket keys from them
+    without re-crossing the Arrow boundary).
 
     The scale path (char shingles + OPH, the DEFAULT config) runs the
     whole batch through `features.batch_doc_features` — one vectorized
@@ -153,30 +136,14 @@ def _sig_columns(pdf: pd.DataFrame, cfg: DedupConfig, a, b):
     return cols, minh_mat, run_mat
 
 
-def make_signatures_fn(cfg: DedupConfig):
-    """mapInPandas fn for stage 1. The (a, b) MinHash coefficients are
-    derived from cfg.seed inside each worker (cheap, deterministic) rather
-    than broadcast — no closure-captured arrays to serialize."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a, b = minhash_params(cfg)
-        for pdf in batches:
-            out = _sig_columns(pdf, cfg, a, b)
-            if out is None:
-                continue
-            yield pd.DataFrame(out[0])
-
-    return fn
-
-
 def _bucket_arrays(
     minh: np.ndarray, run: np.ndarray, cfg: DedupConfig, keys=None
 ):
     """Per-document bucket-entry arrays (band, key, is_probe, rank) for a
-    batch: home keys + [MPLSH §4.1] probe keys, identical values to
-    make_buckets_fn, but grouped per doc so the fused stage-1+2 UDF can
-    emit them as array columns (one JVM explode replaces the second Arrow
-    round-trip of a separate stage 2).
+    batch: home keys (one vectorized band_keys_batch call for the whole
+    batch) + [MPLSH §4.1] probe keys, grouped per doc so the fused
+    stage-1+2 UDF can emit them as array columns (one JVM explode turns
+    them into rows).
 
     `keys` (optional): per-doc text_sha. Equal key => equal text => equal
     signature => identical bucket entries, so the probe-sequence heap —
@@ -236,7 +203,10 @@ def make_fused_fn(cfg: DedupConfig):
     """mapInPandas fn for the fused stage 1+2: signature bundle plus this
     doc's bucket entries as four parallel arrays (FUSED_SCHEMA). One Arrow
     pass computes both stages' outputs; stage 2 becomes a JVM-side explode
-    of the cached fused relation (stages.buckets_from_fused)."""
+    of the cached fused relation (stages.buckets_from_fused). The (a, b)
+    MinHash coefficients are derived from cfg.seed inside each worker
+    (cheap, deterministic) rather than broadcast — no closure-captured
+    arrays to serialize."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         a, b = minhash_params(cfg)
@@ -257,70 +227,8 @@ def make_fused_fn(cfg: DedupConfig):
     return fn
 
 
-# ---------------------------------------------------------------------------
-# U2 — buckets: (url, minhash, runnerup) -> home + probe bucket rows
-# ---------------------------------------------------------------------------
-def make_buckets_fn(cfg: DedupConfig):
-    """mapInPandas fn for stage 2: banding + multi-probe expansion.
-
-    Home keys for the whole Arrow batch are hashed in one vectorized call
-    (band_keys_batch); the [MPLSH §4.1] probe sequence is generated per doc
-    (tiny heap over r gaps) exactly as the oracle does.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield _empty_buckets()
-                continue
-            minh = i64_to_u64(np.array(pdf["minhash"].tolist(), dtype=np.int64))
-            run = i64_to_u64(np.array(pdf["runnerup"].tolist(), dtype=np.int64))
-            urls = pdf["url"].to_numpy()
-            home = H.band_keys_batch(minh, cfg.bands, cfg.rows_per_band).view(np.int64)
-
-            bands_out = [np.tile(np.arange(cfg.bands, dtype=np.int32), n)]
-            keys_out = [home.ravel()]
-            urls_out = [np.repeat(urls, cfg.bands)]
-            probe_out = [np.zeros(n * cfg.bands, dtype=bool)]
-            rank_out = [np.zeros(n * cfg.bands, dtype=np.int32)]
-            if cfg.probes > 1:
-                doc_idx, p_band, p_rank, p_key = H.probe_keys_batch(
-                    minh, run, cfg.bands, cfg.rows_per_band, cfg.probes
-                )
-                if doc_idx.size:
-                    bands_out.append(p_band.astype(np.int32))
-                    keys_out.append(p_key.view(np.int64))
-                    urls_out.append(np.take(urls, doc_idx))
-                    probe_out.append(np.ones(doc_idx.size, dtype=bool))
-                    rank_out.append(p_rank.astype(np.int32))
-            yield pd.DataFrame(
-                {
-                    "band": np.concatenate(bands_out),
-                    "bucket_key": np.concatenate(keys_out),
-                    "url": np.concatenate(urls_out),
-                    "is_probe": np.concatenate(probe_out),
-                    "probe_rank": np.concatenate(rank_out),
-                }
-            )
-
-    return fn
-
-
-def _empty_buckets() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "band": pd.Series([], dtype=np.int32),
-            "bucket_key": pd.Series([], dtype=np.int64),
-            "url": pd.Series([], dtype=object),
-            "is_probe": pd.Series([], dtype=bool),
-            "probe_rank": pd.Series([], dtype=np.int32),
-        }
-    )
-
-
 # NOTE: pair explosion (former U3) is NOT a UDF — it runs JVM-side as a
-# double explode over the collected member lists (stages._capped_pairs),
+# double explode over the collected member lists (stages.stage3_candidates),
 # staying inside whole-stage codegen. Kept out of Python deliberately.
 
 

@@ -1,12 +1,13 @@
 #!/bin/bash
-# Strict clean-host-window hunter (round-5 variant of hunt_clean_window.sh):
-# gate the launch on BOTH canaries — single-core matmul <= 0.45 s (mid
-# known-good band, not the 0.5 edge) AND the pinned parallel canary's
-# cpu_scaling >= 0.9 — so a rep12 scaling pair is only spent on windows
-# where the HOST itself can demonstrate the target efficiency. Motivated
-# by the two wasted late-round-5 pairs: one launched at matmul 0.499 and
-# hit a 0.793 host cpu-scaling ceiling (INVALID), one drifted 17%.
+# Strict clean-host-window hunter: gate the launch on BOTH canaries —
+# single-core matmul <= 0.45 s (mid known-good band, not the 0.5 edge) AND
+# the pinned parallel canary's cpu_scaling >= 0.9 — so a rep12 scaling
+# pair is only spent on windows where the HOST itself can demonstrate the
+# target efficiency. Motivated by the two wasted late-round-5 pairs: one
+# launched at matmul 0.499 and hit a 0.793 host cpu-scaling ceiling
+# (INVALID), one drifted 17%.
 # Usage: scripts/hunt_clean_window_strict.sh <logfile> <cmd...>
+# Exits with the wrapped command's status, or 1 if no window was found.
 set -u
 LOG="$1"; shift
 cd "$(dirname "$0")/.."
@@ -24,8 +25,7 @@ EOF
   if python -c "import sys; sys.exit(0 if (float('${M}') <= 0.45 and float('${S}') >= 0.9) else 1)"; then
     echo "$(date -u +%H:%M:%S) strict clean window -> running: $*" >> "$LOG"
     "$@" >> "$LOG" 2>&1
-    echo "EXIT=$?" >> "$LOG"
-    exit 0
+    rc=$?; echo "EXIT=$rc" >> "$LOG"; exit $rc
   fi
   sleep 150
 done

@@ -1,7 +1,7 @@
 """Resume-equivalence + determinism invariants (SURVEY.md §5.4;
 BASELINE.json:6 "resumes mid-pipeline with full lineage").
 
-NOTE: these tests deliberately run the pipeline three times at sf0.001;
+NOTE: these tests deliberately run the pipeline several times at sf0.001;
 they are the slowest module in the suite (~2 min)."""
 
 import os
@@ -23,6 +23,7 @@ def _pages_df(spark, corpus):
 
 KEYS = {
     "signatures": ["url"],
+    "buckets": ["band", "bucket_key", "url", "is_probe", "probe_rank"],
     "candidate_pairs": ["url_a", "url_b"],
     "verified_pairs": ["url_a", "url_b"],
     "clusters": ["url"],
@@ -74,6 +75,23 @@ def test_resume_equals_uninterrupted(three_runs):
     for t in FINAL_TABLES:
         pd.testing.assert_frame_equal(
             _table_pd(spark, a, t), _table_pd(spark, c, t), check_dtype=False
+        )
+
+
+def test_resume_rebuilds_uncommitted_buckets(three_runs, corpus_smoke, tmp_path):
+    """Signatures committed, buckets not: the resumed run recomputes the
+    fused stage-1+2 pass, commits only buckets, and ends equal to run A."""
+    spark, a, _, _ = three_runs
+    root = str(tmp_path / "wh")
+    pages = _pages_df(spark, corpus_smoke)
+    pipeline.run(spark, pages, DEFAULT, root, stop_after="buckets")
+    os.remove(os.path.join(root, "buckets", "_MANIFEST.json"))
+    d = pipeline.run(spark, pages, DEFAULT, root)
+    assert "signatures" in d.stages_skipped
+    assert "buckets" in d.stages_run
+    for t in ["buckets"] + FINAL_TABLES:
+        pd.testing.assert_frame_equal(
+            _table_pd(spark, a, t), _table_pd(spark, d, t), check_dtype=False
         )
 
 

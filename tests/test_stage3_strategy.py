@@ -1,49 +1,6 @@
-"""The two physical strategies for stage-3 candidate generation (semijoin
-vs window; stages.STAGE3_STRATEGY) must be output-identical on candidates
-AND dropped_buckets — including the hot-bucket drop path."""
-
-import pandas as pd
-import pytest
-
-from dedup import stages
-from dedup.config import DEFAULT
-from dedup.synth import load_pages_spark
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def fused_inputs(spark):
-    pages = load_pages_spark(spark, SF)
-    fused = stages.stage12_fused(pages, DEFAULT).cache()
-    sigs = stages.signatures_from_fused(fused)
-    buckets = stages.buckets_from_fused(fused)
-    yield sigs, buckets
-    fused.unpersist()
-
-
-def _run(sigs, buckets, strategy):
-    out = stages.stage3_candidates(sigs, buckets, DEFAULT, strategy=strategy)
-    cand = (
-        out.candidates.toPandas()
-        .sort_values(["url_a", "url_b"], ignore_index=True)
-    )
-    dropped = (
-        out.dropped_buckets.toPandas()
-        .sort_values(["generator", "key"], ignore_index=True)
-    )
-    out.entries.unpersist()
-    out.counts.unpersist()
-    return cand, dropped
-
-
-def test_strategies_identical(fused_inputs):
-    sigs, buckets = fused_inputs
-    cand_s, drop_s = _run(sigs, buckets, "semijoin")
-    cand_w, drop_w = _run(sigs, buckets, "window")
-    pd.testing.assert_frame_equal(cand_s, cand_w)
-    pd.testing.assert_frame_equal(drop_s, drop_w)
-    assert len(cand_s) > 0
+"""Stage-3 url dictionary invariants (stages._dense_url_ids). The
+hot-bucket drop path is gated against the NumPy oracle by
+tests/test_parity.py::test_hot_bucket_dropped_and_logged."""
 
 
 def test_dense_url_ids_deterministic_and_isomorphic(spark):
