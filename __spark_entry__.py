@@ -1,8 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship dedup query (full pipeline -> clusters)
-on sf0.001. `queries()` exposes one callable per implemented operator
-family from SURVEY.md §2; every SQL-expressible one has a DuckDB twin in
+on sf0.001; it and the dedup-derived queries read the committed tables
+of one production `pipeline.run` into a temporary warehouse.
+`queries()` exposes one callable per implemented operator family from
+SURVEY.md §2; every SQL-expressible one has a DuckDB twin in
 `oracle_sql()` (column names aliased identically on both sides). The
 dedup-pipeline queries run over the deterministically synthesized `pages`
 corpus (dedup/synth.py, seed 42) — that synthesis is not SQL-expressible,
@@ -15,6 +17,9 @@ value hash is insensitive to accumulation-order last-bit noise.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -29,12 +34,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full dedup of the synthesized pages corpus at sf0.001 ->
     clusters(url, cluster_id). Driver checks rows > 0 + stable schema."""
-    from dedup.config import DEFAULT
-    from dedup.pipeline import run_in_memory
-    from dedup.synth import load_pages_spark
-
-    pages = load_pages_spark(spark, SF_SMOKE)
-    return run_in_memory(spark, pages, DEFAULT)["clusters"]
+    return _pipeline_run(spark, SF_SMOKE)["clusters"]
 
 
 # ---------------------------------------------------------------------------
@@ -2215,7 +2215,8 @@ def _semdedup_keep(spark, sf_dir):
 # stage-3..6 transforms are re-stated in SQL over the oracle's upstream
 # tables. The pytest parity suite remains the bit-for-bit gate.
 # ---------------------------------------------------------------------------
-_PIPELINE_CACHE: dict[tuple[str, str], dict] = {}
+#: (applicationId, sf_dir) -> (warehouse root, {stage table: DataFrame})
+_PIPELINE_CACHE: dict[tuple[str, str], tuple[str, dict]] = {}
 
 
 def _xor_fold(col):
@@ -2225,33 +2226,36 @@ def _xor_fold(col):
     return F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x))
 
 
-def _pipeline_tables(spark, sf_dir) -> dict:
-    """Shared access to the in-memory dedup pipeline's stage DataFrames.
-
-    Materializes the NumPy oracle's stage tables for this sf first so the
-    DuckDB twins (oracle_sql) can read them when the driver runs them, then
-    builds the pipeline once per (session, sf_dir): the driver calls each
-    dedup_* query separately; the cached stage DataFrames (signatures/
-    candidates/verified are .cache()d inside run_in_memory) make every
-    subsequent consumer reuse the computation. Keyed by applicationId so a
-    restarted session never gets stale DataFrames bound to a stopped context.
-    """
+def _pipeline_run(spark, sf_dir) -> dict:
+    """Committed stage tables of ONE `pipeline.run` per (session, sf_dir),
+    in a driver-local temp warehouse (local mode: executors share the
+    driver's filesystem). Entries of other (stopped) sessions are evicted
+    with their warehouse on every call; interpreter exit deletes the rest."""
     from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-    from dedup.pipeline import run_in_memory
+    from dedup.pipeline import STAGE_ORDER, run
     from dedup.synth import load_pages_spark
 
-    ensure_cache(sf_dir, DEFAULT)
-    key = (spark.sparkContext.applicationId, sf_dir)
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _PIPELINE_CACHE if k[0] != app]:
+        shutil.rmtree(_PIPELINE_CACHE.pop(stale)[0], ignore_errors=True)
+    key = (app, sf_dir)
     if key not in _PIPELINE_CACHE:
-        # evict entries from other (stopped/replaced) sessions: their
-        # DataFrames are unusable and would otherwise pin references
-        # for the life of a long-running service process
-        for stale in [k for k in _PIPELINE_CACHE if k[0] != key[0]]:
-            del _PIPELINE_CACHE[stale]
-        pages = load_pages_spark(spark, sf_dir)
-        _PIPELINE_CACHE[key] = run_in_memory(spark, pages, DEFAULT)
-    return _PIPELINE_CACHE[key]
+        root = tempfile.mkdtemp(prefix="dedup_contract_wh_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        res = run(spark, load_pages_spark(spark, sf_dir), DEFAULT, root)
+        tables = {t: res.df(spark, t) for t in STAGE_ORDER[1:]}
+        _PIPELINE_CACHE[key] = (root, tables)
+    return _PIPELINE_CACHE[key][1]
+
+
+def _pipeline_tables(spark, sf_dir) -> dict:
+    """`_pipeline_run` after materializing the NumPy oracle's stage tables
+    that the DuckDB twins (oracle_sql) read."""
+    from dedup.config import DEFAULT
+    from dedup.contract_oracle import ensure_cache
+
+    ensure_cache(sf_dir, DEFAULT)
+    return _pipeline_run(spark, sf_dir)
 
 
 def _dedup_stage(table: str):
@@ -2626,8 +2630,9 @@ def _sessionize_events(spark, sf_dir):
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    # ts is unique in the fixture (count == countDistinct at every sf),
-    # so min_by/max_by on ts are deterministic in both engines
+    # ts is unique in the fixture (count == countDistinct at every sf,
+    # pinned by tests/test_contract.py::test_events_ts_unique), so
+    # min_by/max_by on ts are deterministic in both engines
     return sess.groupBy("user_id", "session_no").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.min_by("event_id", "ts").alias("first_event_id"),

@@ -11,6 +11,10 @@ Resume semantics: `run(..., resume=True)` skips any stage whose table has
 a committed manifest for the SAME config_hash; a crash mid-stage leaves no
 manifest, so the stage reruns from its (committed) inputs. tests/test_resume
 proves a killed-after-stage-k run resumes to byte-identical final tables.
+
+`run()` is the one orchestration path: jobs/run_dedup.py, bench.py,
+perfbench, streaming's bootstrap batch and the driver contract
+(__spark_entry__.py, into a temporary warehouse) all call it.
 """
 
 from __future__ import annotations
@@ -97,46 +101,6 @@ def _clusters(
     return connected_components(
         dup, urls, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
     )
-
-
-def run_in_memory(
-    spark: SparkSession, pages: DataFrame, cfg: DedupConfig
-) -> dict[str, DataFrame]:
-    """Compose the whole pipeline without warehouse materialization —
-    for the driver contract / small interactive runs. Signatures and
-    buckets are cached (each feeds two consumers); CC still localCheckpoints
-    per iteration internally."""
-    fused = stages.stage12_fused(pages, cfg).cache()
-    sigs = stages.signatures_from_fused(fused)
-    buckets = stages.buckets_from_fused(fused)
-    cand = stages.stage3_candidates(sigs, buckets, cfg)
-    candidates = cand.candidates.cache()
-    dropped = cand.dropped_buckets.cache()
-    # materialize both consumers of the persisted entries relation now,
-    # then release it — callers hold these DataFrames for a whole
-    # session (driver contract), and the large entries relation (~64
-    # rows/doc) must not stay pinned in executor storage that long
-    candidates.count()
-    dropped.count()
-    cand.entries.unpersist()
-    verified = stages.stage4_verify(candidates, sigs, pages, cfg).cache()
-    clusters = _clusters(
-        verified.filter("is_dup").select("url_a", "url_b"),
-        pages.select("url"),
-        sigs.select("url", "text_sha"),
-        cfg,
-        n_pairs=verified.count(),
-        n_docs=pages.select("url").count(),
-    )
-    return {
-        "signatures": sigs,
-        "buckets": buckets,
-        "candidate_pairs": candidates,
-        "dropped_buckets": dropped,
-        "verified_pairs": verified,
-        "clusters": clusters,
-        "canonical_pages": stages.stage6_canonical(clusters, pages),
-    }
 
 
 def run(

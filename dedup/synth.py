@@ -303,3 +303,26 @@ def load_pages_spark(spark, sf_dir: str, seed: int = 42, replicate: int = 1,
         "text",
         "lang",
     )
+
+
+def snapshot_pages(spark, wh, sf_dir: str, replicate: int = 1,
+                   target_file_bytes: int = 8 << 20) -> None:
+    """Commit sf_dir's synthesized corpus as `wh`'s `pages` table: the
+    untimed input prep of jobs/run_dedup.py and bench.py. Files are sized
+    by input BYTES (snapshot_partitions) and partitioned by warc_day (the
+    days(warc_ts) stand-in); the range repartition keeps one writer task
+    per (day, url) range so day partitioning doesn't multiply the files."""
+    from pyspark.sql import functions as F
+
+    corpus = make_corpus(sf_dir)
+    pages = load_pages_spark(spark, sf_dir, replicate=replicate, corpus=corpus)
+    n_parts = snapshot_partitions(
+        corpus_nbytes(corpus) * replicate, target_file_bytes=target_file_bytes
+    )
+    wh.write(
+        pages.withColumn("warc_day", F.to_date("warc_ts")).repartitionByRange(
+            n_parts, "warc_day", "url"
+        ),
+        "pages",
+        partition_by=["warc_day"],
+    )

@@ -4,6 +4,7 @@ against its oracle_sql() DuckDB twin — the same check the driver applies.
 Non-SQL entries get the weaker rows>=0 + stable-schema check."""
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -175,9 +176,35 @@ def test_bpe_train_token_aware_merge(spark):
 
 
 def test_entry_smoke(spark):
+    """759 urls in 524 clusters: the known-good sf0.001 figures (seed 42,
+    DEFAULT config) that jobs/run_dedup.py prints too."""
+    from pyspark.sql import functions as F
+
     df = entry_mod.entry(spark)
-    assert df.count() > 0
     assert set(c.name for c in df.schema.fields) == {"url", "cluster_id"}
+    got = df.agg(F.count("*"), F.countDistinct("cluster_id")).first()
+    assert tuple(got) == (759, 524)
+
+
+def test_pipeline_tables_reuse_run_and_evict_stale(spark, monkeypatch, tmp_path):
+    """A repeat call reuses the session's committed run without writing;
+    another (stopped) session's entry is evicted with its warehouse."""
+    from dedup.catalog import MANIFEST, Warehouse
+
+    sf = "/root/testdata/sf0.001"
+    first = entry_mod._pipeline_tables(spark, sf)
+    root, _ = entry_mod._PIPELINE_CACHE[(spark.sparkContext.applicationId, sf)]
+    for t in first:
+        assert os.path.exists(os.path.join(root, t, MANIFEST)), t
+    stale = tmp_path / "stale_wh"
+    stale.mkdir()
+    entry_mod._PIPELINE_CACHE[("stopped-app", sf)] = (str(stale), {})
+    writes = []
+    monkeypatch.setattr(Warehouse, "write", lambda *a, **k: writes.append(a))
+    assert entry_mod._pipeline_tables(spark, sf) is first
+    assert writes == []
+    assert ("stopped-app", sf) not in entry_mod._PIPELINE_CACHE
+    assert not stale.exists()
 
 
 def test_bloom_decontam_supersets_exact(spark):
@@ -852,6 +879,17 @@ def test_asof_join_matches_recomputation(spark):
     }
     assert got == want
     assert want  # the fixture actually exercises matches
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_events_ts_unique(sf):
+    """asof_join_events and sessionize_events pick events by ts, so both
+    engines agree only while events.ts is unique in the fixture."""
+    n, n_ts = duckdb.sql(
+        "SELECT count(*), count(DISTINCT ts) FROM "
+        f"read_parquet('/root/testdata/{sf}/events.parquet')"
+    ).fetchone()
+    assert n == n_ts > 0
 
 
 def test_asof_join_tie_rule_is_inclusive(spark):
